@@ -49,21 +49,7 @@ object Bench {
       }
       s""""load_warning":"$msg","""
     } else ""
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // local testdata is a single ~10MB file per table; the 128MB
-      // default split => 1 task on 32 cores. Split by row group so the
-      // scan parallelizes (at real scale the file count does this).
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt, "graft-bench")
 
     // JVM/codegen warmup so the first measured query doesn't pay
     // classloading for the whole SQL engine, vectorized parquet reader,

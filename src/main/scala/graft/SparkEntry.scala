@@ -3600,7 +3600,6 @@ object SparkEntry {
     // activity heatmap: (day-of-week, hour) event counts with share
     // ppm — the ops-dashboard staple, pure epoch arithmetic
     "q_activity_heatmap" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       events(s, dir)
         .select(expr("(ts div 86400000000 + 3) % 7").as("dow"),
           expr("ts % 86400000000 div 3600000000").as("hour"))

@@ -137,19 +137,7 @@ object Main {
     require(a.inputDir.nonEmpty && a.outputDir.nonEmpty,
       "--input-dir and --output-dir are required")
 
-    val spark = SparkSession.builder()
-      .master(a.master)
-      .appName(s"graft-anonymize-${a.dbName}-${a.schemaName}")
-      .config("spark.sql.shuffle.partitions",
-        a.master match { case m if m.contains("[") =>
-          m.dropWhile(_ != '[').drop(1).takeWhile(_ != ']') match {
-            case "*" => "32"; case n => n }
-          case _ => "200" })
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.cli(a.master, s"graft-anonymize-${a.dbName}-${a.schemaName}")
     try run(a, spark) finally spark.stop()
   }
 

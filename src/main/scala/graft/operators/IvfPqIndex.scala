@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{vectors, PqEncodeExpr, PqLutExpr, PqTable}
+import graft.functions.{PqEncodeExpr, PqLutExpr, PqTable}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

@@ -115,10 +115,6 @@ object LineageCut {
       * a still-lazy final frame would read freed blocks. */
     def finish(df: DataFrame): DataFrame =
       if (lastCut != null && (df eq lastCut)) df else cut(df)
-    /** Hand ownership of the current cut to the caller: the next
-      * [[cut]] will NOT release it. For loops whose consumers need the
-      * final TWO frames (HITS keeps hub and auth). */
-    def detach(): Unit = { lastCut = null }
   }
 
   /** Free a superseded cut — block-manager blocks always, plus the

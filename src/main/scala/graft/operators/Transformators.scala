@@ -17,40 +17,33 @@ import graft.functions.anon
   */
 object Transformators {
 
-  /** Registry keys, verbatim from the reference config surface. */
-  val operationTypes: Set[String] = Set(
-    "fake_firstname_transformation",
-    "fake_lastname_transformation",
-    "fake_name_transformation",
-    "fake_companyname_transformation",
-    "fake_email_transformation",
-    "fake_address_transformation",
-    "fake_md5_transformation",
-    "fake_phone_transformation",
-    "fake_multi_email_transformation",
-    "fake_email_with_id_prefix_transformation")
+  /** The Custom operations by their reference config name, each compiled
+    * to an expression over the input column (the id-prefix op also reads
+    * the sibling `id` column —
+    * fake_email_with_id_prefix_transformator.rs:19-62). */
+  private val operations: Map[String, (Column, Long) => Column] = Map(
+    "fake_firstname_transformation"   -> anon.fakeFirstName,
+    "fake_lastname_transformation"    -> anon.fakeLastName,
+    "fake_name_transformation"        -> anon.fakeName,
+    "fake_companyname_transformation" -> anon.fakeCompanyName,
+    "fake_email_transformation"       -> anon.fakeEmail,
+    "fake_address_transformation"     -> anon.fakeAddress,
+    "fake_md5_transformation"         -> anon.fakeUuid,
+    "fake_phone_transformation"       -> anon.fakePhone,
+    "fake_multi_email_transformation" -> anon.fakeMultiEmail,
+    "fake_email_with_id_prefix_transformation" ->
+      ((input, seed) => anon.fakeEmailWithIdPrefix(col("id"), input, seed)))
 
-  /** Compile one Custom operation to an expression over `input` (and, for
-    * the id-prefix op, the sibling `id` column —
-    * fake_email_with_id_prefix_transformator.rs:19-62). Unknown names
-    * error, matching the reference's registry panic
+  /** Registry keys, verbatim from the reference config surface. */
+  val operationTypes: Set[String] = operations.keySet
+
+  /** Compile one Custom operation to an expression over `input`. Unknown
+    * names error, matching the reference's registry panic
     * (anonymization_config_table_impl.rs:111). */
   def custom(operationType: String, input: Column, seed: Long): Column =
-    operationType match {
-      case "fake_firstname_transformation"   => anon.fakeFirstName(input, seed)
-      case "fake_lastname_transformation"    => anon.fakeLastName(input, seed)
-      case "fake_name_transformation"        => anon.fakeName(input, seed)
-      case "fake_companyname_transformation" => anon.fakeCompanyName(input, seed)
-      case "fake_email_transformation"       => anon.fakeEmail(input, seed)
-      case "fake_address_transformation"     => anon.fakeAddress(input, seed)
-      case "fake_md5_transformation"         => anon.fakeUuid(input, seed)
-      case "fake_phone_transformation"       => anon.fakePhone(input, seed)
-      case "fake_multi_email_transformation" => anon.fakeMultiEmail(input, seed)
-      case "fake_email_with_id_prefix_transformation" =>
-        anon.fakeEmailWithIdPrefix(col("id"), input, seed)
-      case other =>
-        throw new IllegalArgumentException(s"unknown operation_type: $other")
-    }
+    operations.getOrElse(operationType,
+      throw new IllegalArgumentException(s"unknown operation_type: $operationType")
+    )(input, seed)
 
   /** Compile a ColumnTransformation to the output expression for its
     * column, given the column's current Spark type.

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.config.ConfigLoader
@@ -16,16 +15,8 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = java.nio.file.Files.createTempDirectory("graft_demo").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(4, "graft-demo")
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     val customer = spark.read.parquet(s"$sfDir/customer.parquet")
     val anonymized = customer.select(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Ivf, Similarity}
@@ -13,14 +13,7 @@ object RecallEval {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val k = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-recall")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(8, "graft-recall")
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 50)

@@ -187,32 +187,13 @@ object Bridge {
           case _ => true
         }
         if (!partOk) ck
-        else {
-          // the plain checkpoint's LogicalRDD (built by Spark's own
-          // fromDataset) already carries the origin stats/constraints
-          // the optimizer needs for broadcast decisions; they sit in
-          // the private curried parameter list, so the partitioning-
-          // corrected twin reads them reflectively rather than dropping
-          // them (a stats-less LogicalRDD reports defaultSizeInBytes
-          // and would never auto-broadcast again)
-          def priv[T](name: String): T = {
-            val f = classOf[LogicalRDD].getDeclaredField(name)
-            f.setAccessible(true)
-            f.get(lr).asInstanceOf[T]
-          }
-          // the field names match Spark 4.1.2; on any future rename the
-          // rewrap must DEGRADE to the plain checkpoint (correct, just
-          // without the layout), never turn every lineage cut into a
-          // NoSuchFieldException
-          scala.util.Try {
-            ofRows(df.sparkSession, new LogicalRDD(lr.output, lr.rdd, part,
-              ordering, lr.isStreaming,
-              priv[Option[org.apache.spark.sql.connector.read.streaming.SparkDataStream]]("stream"))(
-              priv[org.apache.spark.sql.classic.SparkSession]("session"),
-              priv[Option[org.apache.spark.sql.catalyst.plans.logical.Statistics]]("originStats"),
-              priv[Option[org.apache.spark.sql.catalyst.expressions.ExpressionSet]]("originConstraints")))
-          }.getOrElse(ck)
-        }
+        // makeCopy re-applies the curried otherCopyArgs (session,
+        // originStats, originConstraints), so the partitioning-corrected
+        // twin keeps the origin stats the optimizer needs for broadcast
+        // decisions (a stats-less LogicalRDD reports defaultSizeInBytes
+        // and would never auto-broadcast again)
+        else ofRows(df.sparkSession, lr.makeCopy(Array[AnyRef](lr.output,
+          lr.rdd, part, ordering, Boolean.box(lr.isStreaming), lr.stream)))
       case _ => ck
     }
   }

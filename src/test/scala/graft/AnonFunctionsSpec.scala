@@ -3,8 +3,6 @@ package graft
 import graft.fakegen.FakeGen
 import graft.functions.anon
 
-import org.apache.spark.sql.functions._
-
 /** Expression-level behavior through the real Catalyst/codegen path. */
 class AnonFunctionsSpec extends SparkTestBase {
   import spark.implicits._

@@ -2,8 +2,6 @@ package graft
 
 import graft.operators.CdcMerge
 
-import org.apache.spark.sql.functions._
-
 /** CDC point-in-time recovery and additive schema evolution — the two
   * merge variants layered on applyDelta. The oracle rows pin the
   * end-to-end file-trail forms (q_cdc_asof_snapshot,

@@ -49,6 +49,20 @@ class FiltersAndPipelineSpec extends SparkTestBase {
     assert(r.isNullAt(2))
   }
 
+  test("operation table: every registered name compiles and fakes its input; unknown names throw") {
+    val df = Seq((7L, "+30 210 555 0101")).toDF("id", "v")
+    val ops = Transformators.operationTypes.toSeq.sorted
+    assert(ops.size == 10)
+    val row = df.select(ops.map(op =>
+      Transformators.custom(op, col("v"), 42L).as(op)): _*).collect().head
+    ops.indices.foreach { i =>
+      assert(!row.isNullAt(i) && row.getString(i) != "+30 210 555 0101", ops(i))
+    }
+    val e = intercept[IllegalArgumentException](
+      Transformators.custom("fake_ssn_transformation", col("v"), 42L))
+    assert(e.getMessage.contains("unknown operation_type: fake_ssn_transformation"))
+  }
+
   test("Replace keeps the column's type (divergence from reference, documented)") {
     val df = Seq((1, 2.5)).toDF("i", "d")
     val out = Transformators.applyMulti(df, Seq(

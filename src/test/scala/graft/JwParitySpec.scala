@@ -4,7 +4,6 @@ import java.sql.DriverManager
 
 import graft.functions.TextKernels
 import graft.operators.Linkage
-import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Bit-identity of the Jaro / Jaro–Winkler kernels against DuckDB's

@@ -20,14 +20,18 @@ class LineageCutSpec extends SparkTestBase {
   private def hasExchange(df: org.apache.spark.sql.DataFrame): Boolean =
     df.queryExecution.executedPlan.toString.contains("Exchange")
 
-  test("gate OPEN (full-width layout): downstream same-key aggregation elides its exchange; rows identical") {
+  /** With coalescing off the aggregation's exchange keeps all shuffle
+    * partitions (4 == defaultParallelism on local[4]), so the kept
+    * layout passes the width gate. */
+  private def withGateOpen(body: => Unit): Unit = {
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
     val old = spark.conf.get(key, "true")
-    try {
-      // with coalescing off the aggregation's exchange keeps all
-      // shuffle partitions (4 == defaultParallelism on local[4]), so
-      // the kept layout passes the width gate
-      spark.conf.set(key, "false")
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, old)
+  }
+
+  test("gate OPEN (full-width layout): downstream same-key aggregation elides its exchange; rows identical") {
+    withGateOpen {
       val ck = LineageCut.cut(aggByK)
       val reAgg = ck.groupBy(col("k")).agg(count(lit(1)).as("c"))
       val expected = aggByK.groupBy(col("k")).agg(count(lit(1)).as("c"))
@@ -37,7 +41,26 @@ class LineageCutSpec extends SparkTestBase {
       assert(!hasExchange(reAgg),
         "a same-key aggregation over a kept full-width layout must not re-shuffle")
       LineageCut.release(ck)
-    } finally spark.conf.set(key, old)
+    }
+  }
+
+  test("gate OPEN: the rewrapped LogicalRDD keeps the plain checkpoint's origin stats") {
+    withGateOpen {
+      val ck = LineageCut.cut(aggByK)
+      val plain = aggByK.localCheckpoint(eager = true)
+      ck.queryExecution.analyzed match {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          assert(lr.outputPartitioning.numPartitions == 4, "the gate must be open here")
+        case other => fail(s"expected a LogicalRDD leaf, got ${other.nodeName}")
+      }
+      val size = ck.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(size === plain.queryExecution.optimizedPlan.stats.sizeInBytes)
+      // a stats-less LogicalRDD reports spark.sql.defaultSizeInBytes,
+      // Long.MaxValue unless configured
+      assert(size < BigInt(Long.MaxValue))
+      LineageCut.release(ck)
+      LineageCut.release(plain)
+    }
   }
 
   test("gate CLOSED (coalesced local layout): the cut stays a plain checkpoint — downstream aggregation re-shuffles at session width") {

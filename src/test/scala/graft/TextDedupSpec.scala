@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{text, vectors}
+import graft.functions.text
 import graft.operators.{Dedup, Multimodal, Similarity}
 
 import org.apache.spark.sql.functions._
