@@ -161,7 +161,9 @@ object Bench {
     // EXTERNAL burst instead stands out against the run's own median
     // (the r20 contamination: a q_f* block at 5.5–6.9 vs ~2
     // elsewhere) — retry only above max(maxLoad, 2×median).
-    val chosenLoads = firstPass.map(_._2._3).sorted
+    // getSystemLoadAverage returns a negative value where the platform
+    // has no load average: such samples say nothing about contention
+    val chosenLoads = firstPass.map(_._2._3).filter(_ >= 0).sorted
     val medianLoad =
       if (chosenLoads.isEmpty) 0.0 else chosenLoads(chosenLoads.size / 2)
     val retryGate = math.max(maxLoad, 2.0 * medianLoad)
@@ -204,19 +206,21 @@ object Bench {
     // anyone with the whole log), and a COMPACT totals-only line —
     // same keys, guaranteed to fit any sane tail — is printed LAST.
     println(line)
-    val stamped = s"BENCH_c$cpus.json"
-    val outPaths = sys.env.get("SPARK_GRAFT_BENCH_OUT") match {
-      // explicit destination wins; still add the cpus-stamped copy so
-      // a multi-config caller never clobbers one config with another
-      case Some(p) => Seq(p, stamped)
-      case None    => Seq("BENCH.json", stamped)
+    // an explicit destination is the ONLY file written: a focused run
+    // (scripts/scale_probe.sh, scripts/bench_ab.sh) must not overwrite
+    // the full-surface cpus-stamped artifact with its subset
+    val (queriesFile, outPaths) = sys.env.get("SPARK_GRAFT_BENCH_OUT") match {
+      case Some(p) => (p, Seq(p))
+      case None    =>
+        val stamped = s"BENCH_c$cpus.json"
+        (stamped, Seq("BENCH.json", stamped))
     }
-    outPaths.distinct.foreach { p =>
+    outPaths.foreach { p =>
       java.nio.file.Files.write(java.nio.file.Paths.get(p),
         (line + "\n").getBytes("UTF-8"))
     }
     val compact =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec",$loadWarning"n_queries":${results.size},"queries_file":"$stamped",$load,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec",$loadWarning"n_queries":${results.size},"queries_file":"$queriesFile",$load,"sf":"$sfDir"}"""
     println(compact)
     spark.stop()
   }

@@ -860,8 +860,13 @@ object Dedup {
     // rounds). LineageCut materializes and cuts the lineage —
     // localCheckpoint by default, reliable (HDFS) checkpoint when the
     // session opts in via spark.graft.bsp.checkpoint=reliable (fault
-    // tolerance for long chains on a real cluster).
-    var labels = LineageCut.cut(edges.select(col("src").as("id")).distinct()
+    // tolerance for long chains on a real cluster). The label frame is
+    // read several times per round, so the chain cuts every round; each
+    // cut frees the superseded round's blocks (reliable mode also its
+    // snapshot files) right after the new round is materialized — O(1)
+    // label snapshots instead of O(iterations) until GC.
+    val pc = new LineageCut.PeriodicCut()
+    var labels = pc.cut(edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id")))
     var converged = false
     var iter = 0
@@ -889,23 +894,15 @@ object Dedup {
       // bytes/row of extra checkpoint width buys two exchanges + a
       // join per round; the decision ("any label changed") and the
       // returned labels are identical.
-      val next = LineageCut.cut(stepped.as("s")
+      labels = pc.cut(stepped.as("s")
         .join(stepped.select(col("id").as("__cid"),
           col("component").as("__cc")),
           col("s.component") === col("__cid"), "left")
         .select(col("s.id").as("id"), col("s.__old").as("__old"),
           least(col("s.component"), coalesce(col("__cc"), col("s.component")))
             .as("component")))
-      val changed = next.filter(col("component") =!= col("__old"))
+      val changed = labels.filter(col("component") =!= col("__old"))
         .limit(1).count()
-      // the superseded round's checkpoint blocks are dead the moment
-      // `changed` is computed (next is itself checkpointed, so nothing
-      // downstream re-reads them): free immediately instead of holding
-      // O(iterations) label snapshots until GC — on a long fixpoint
-      // that's the difference between O(1) and O(diameter) storage
-      // (reliable mode also deletes the superseded snapshot's files)
-      LineageCut.release(labels)
-      labels = next
       converged = changed == 0
       iter += 1
     }
@@ -917,28 +914,11 @@ object Dedup {
     * when candidate pairs fit in driver memory (they usually do: pairs
     * ~ dup-rate x docs, NOT docs^2). Returns ids to DROP (every member
     * of a component except its minimum). */
-  private[graft] def unionFindDropIds(pairs: Array[(Long, Long)]): Set[Long] = {
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { // min root wins => representative = min id
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
-      }
-    }
-    val members = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-    members.filter(id => find(id) != id)
-  }
+  private[graft] def unionFindDropIds(pairs: Array[(Long, Long)]): Set[Long] =
+    unionFindComponents(pairs).collect { case (id, c) if c != id => id }.toSet
 
-  /** Driver union-find that returns the full (id → component) map —
-    * the [[unionFindDropIds]] structure, keeping every member's
-    * min-root instead of only the drop set. */
+  /** Driver union-find that returns the full (id → component) map,
+    * component = the minimum id of the member's component. */
   private[graft] def unionFindComponents(
       pairs: Array[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -951,7 +931,7 @@ object Dedup {
     }
     pairs.foreach { case (a, b) =>
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) {
+      if (ra != rb) { // min root wins => representative = min id
         if (ra < rb) parent(rb) = ra else parent(ra) = rb
       }
     }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over edge DataFrames. Connected components lives in
@@ -27,58 +27,85 @@ object Graph {
     * rank table on src (edges re-used from a cached/checkpointed
     * distinct) + one map-side-combined sum on dst. N rides the plan as
     * a single-row broadcast (the BM25 stats pattern) — no driver
-    * action at construction. Lineage is cut per iteration via
-    * [[LineageCut]] (eager localCheckpoint by default; set
+    * action at construction. Lineage is cut every K rounds via
+    * [[LineageCut.PeriodicCut]] (eager localCheckpoint by default; set
     * spark.graft.bsp.checkpoint=reliable for executor-loss-tolerant
     * HDFS snapshots on a real cluster); iterations are O(E) each, the
     * textbook BSP shape that scales to any edge count the cluster's
     * shuffle can hold. */
   def pageRankScaled(edges: DataFrame, srcCol: String, dstCol: String,
                      iters: Int, scale: Long = 1000000000000L): DataFrame = {
+    requirePower(iters, scale)
+    uniformPower(outDegreeEdges(edges, srcCol, dstCol), expr("pr div od"),
+      iters, scale)
+  }
+
+  private def requirePower(iters: Int, scale: Long): Unit = {
     require(iters >= 1, s"iters must be positive, got $iters")
     require(scale >= 1000000L, s"scale too small for ppm precision: $scale")
-    // lineage cuts via LineageCut: eager localCheckpoint by default,
-    // opt-in reliable checkpoint (spark.graft.bsp.checkpoint=reliable)
-    // for clusters where executor loss must not kill the loop
-    // out-degree attached to the edge frame ONCE, outside the loop, via
-    // a src-keyed count window folded into the SAME cut as the distinct
-    // (one materialization, one pass): the old shape re-aggregated and
-    // re-joined outdeg per power step — one avoidable shuffle + join
-    // per iteration (guide §2.4); pr div od per edge is unchanged, so
-    // the mass arithmetic is bit-identical. The cut also pins the
-    // src-partitioning, so per-iteration joins reshuffle only the rank
-    // table, never the edge frame.
-    val eo = LineageCut.cut(edges
+  }
+
+  /** The distinct (src, dst) edge frame with each src's out-degree `od`
+    * attached ONCE, outside the loop, by a src-keyed count window folded
+    * into the SAME cut as the distinct (one materialization, one pass),
+    * so no round re-aggregates or re-joins the out-degree (guide §2.4).
+    * The cut also pins the src-partitioning, so per-round joins
+    * reshuffle only the rank table, never the edge frame. */
+  private def outDegreeEdges(edges: DataFrame, srcCol: String,
+                             dstCol: String): DataFrame =
+    LineageCut.cut(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .distinct()
       .withColumn("od", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src")))))
+
+  /** The uniform start and teleport of [[pageRankScaled]] and
+    * [[pageRankWeightedScaled]]: every node starts at scale div N and
+    * receives (15·scale) div (100·N) per round. N rides the plan as a
+    * single-row broadcast — no driver action at construction. */
+  private def uniformPower(eo: DataFrame, contrib: Column, iters: Int,
+                           scale: Long): DataFrame =
+    powerIterate(eo, contrib,
+      nodes => nodes
+        .crossJoin(broadcast(
+          nodes.agg(count(lit(1)).cast("long").as("n_nodes"))))
+        .select(col("id"), col("n_nodes")),
+      expr(s"${scale}L div n_nodes"),
+      expr(s"(15 * ${scale}L) div (100 * n_nodes)"), iters)
+
+  /** The power iteration the three PageRank variants share. `eo` is the
+    * cut edge frame (src, dst + whatever `contrib` reads); `attach`
+    * turns the node set into the static base (id + whatever `start` and
+    * `teleport` read), cut once. Per round: one eo ⋈ rank join on src,
+    * one map-side-combined sum on dst, one base ⋈ contribs left join —
+    * new rank = teleport + (85·Σ contrib) div 100, the 0.85 damping as
+    * exact integer ops. The iterated frame carries only (id, pr) and is
+    * referenced ONCE per round — the [[LineageCut.PeriodicCut]] chain
+    * contract — so rounds between cuts stay lazy (same shuffles, K-fold
+    * fewer barriers). `finish` materializes the last round before the
+    * loop-static cuts are released, so the result is a projection over
+    * materialized rows, never a lazy round that re-runs on every use. */
+  private def powerIterate(eo: DataFrame, contrib: Column,
+                           attach: DataFrame => DataFrame, start: Column,
+                           teleport: Column, iters: Int): DataFrame = {
     val nodes = LineageCut.cut(eo.select(col("src").as("id"))
       .unionByName(eo.select(col("dst").as("id"))).distinct())
-    val nDf = nodes.agg(count(lit(1)).cast("long").as("n_nodes"))
-    // static (id, n_nodes) base — the personalizedPageRankScaled shape:
-    // the iterated frame carries only (id, pr) (a third narrower per
-    // round, guide §2.3) and is referenced ONCE per round, which is
-    // exactly the PeriodicCut chain contract — rounds between cuts stay
-    // lazy, so the per-round driver barrier + |V|-row materialization
-    // is paid every K rounds instead of every round (same shuffles,
-    // same arithmetic, bit-identical ranks)
-    val base = LineageCut.cut(nodes.crossJoin(broadcast(nDf))
-      .select(col("id"), col("n_nodes")))
-    val pc = new LineageCut.PeriodicCut(edges.sparkSession)
-    var rank = base.select(col("id"), expr(s"${scale}L div n_nodes").as("pr"))
+    val base = LineageCut.cut(attach(nodes))
+    val pc = new LineageCut.PeriodicCut()
+    var rank = base.select(col("id"), start.as("pr"))
     for (_ <- 1 to iters) {
       val contribs = eo
         .join(rank.select(col("id").as("src"), col("pr")), Seq("src"))
-        .select(col("dst").as("id"), expr("pr div od").as("c"))
+        .select(col("dst").as("id"), contrib.as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("m"))
       rank = pc.step(base
         .join(contribs, Seq("id"), "left")
         .select(col("id"),
-          expr(s"((15 * ${scale}L) div (100 * n_nodes)) + " +
-            "((85 * coalesce(m, 0L)) div 100)").as("pr")))
+          (teleport + expr("(85 * coalesce(m, 0L)) div 100")).as("pr")))
     }
+    rank = pc.finish(rank)
+    Seq(eo, nodes, base).foreach(LineageCut.release)
     rank.select(col("id"), col("pr").as("rank_scaled"))
   }
 
@@ -97,10 +124,9 @@ object Graph {
   def pageRankWeightedScaled(edges: DataFrame, srcCol: String,
                              dstCol: String, weightCol: String, iters: Int,
                              scale: Long = 1000000000000L): DataFrame = {
-    require(iters >= 1, s"iters must be positive, got $iters")
-    require(scale >= 1000000L, s"scale too small for ppm precision: $scale")
+    requirePower(iters, scale)
     // out-weight attached ONCE via a src-keyed sum window folded into
-    // the same cut as the parallel-edge coalesce (the pageRankScaled
+    // the same cut as the parallel-edge coalesce (the outDegreeEdges
     // discipline): saves one shuffle + join per power step; the
     // per-edge pr * __w div ow is unchanged
     val eo = LineageCut.cut(edges
@@ -119,28 +145,7 @@ object Graph {
     require(probe.getLong(1) <= Long.MaxValue / scale,
       s"max edge weight ${probe.getLong(1)} breaks the pr*w Int64 " +
       s"envelope at scale $scale — rescale the weights")
-    val nodes = LineageCut.cut(eo.select(col("src").as("id"))
-      .unionByName(eo.select(col("dst").as("id"))).distinct())
-    val nDf = nodes.agg(count(lit(1)).cast("long").as("n_nodes"))
-    // static (id, n_nodes) base + (id, pr)-only iterated frame under
-    // the PeriodicCut chain (see pageRankScaled) — same shuffles, K
-    // fewer barriers/materializations, bit-identical arithmetic
-    val base = LineageCut.cut(nodes.crossJoin(broadcast(nDf))
-      .select(col("id"), col("n_nodes")))
-    val pc = new LineageCut.PeriodicCut(edges.sparkSession)
-    var rank = base.select(col("id"), expr(s"${scale}L div n_nodes").as("pr"))
-    for (_ <- 1 to iters) {
-      val contribs = eo
-        .join(rank.select(col("id").as("src"), col("pr")), Seq("src"))
-        .select(col("dst").as("id"), expr("pr * __w div ow").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("m"))
-      rank = pc.step(base
-        .join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          expr(s"((15 * ${scale}L) div (100 * n_nodes)) + " +
-            "((85 * coalesce(m, 0L)) div 100)").as("pr")))
-    }
-    rank.select(col("id"), col("pr").as("rank_scaled"))
+    uniformPower(eo, expr("pr * __w div ow"), iters, scale)
   }
 
   /** HITS hubs/authorities (Kleinberg 1999, "Authoritative sources in
@@ -168,7 +173,11 @@ object Graph {
     val nodes = LineageCut.cut(e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct())
     val nDf = nodes.agg(count(lit(1)).cast("long").as("n_nodes"))
-    var hub = LineageCut.cut(nodes.crossJoin(broadcast(nDf))
+    // each half-step's frame is read twice (the raw sum and its
+    // normalizer), so both chains cut every round
+    val hubs = new LineageCut.PeriodicCut()
+    val auths = new LineageCut.PeriodicCut()
+    var hub = hubs.cut(nodes.crossJoin(broadcast(nDf))
       .select(col("id"), expr("1000000L div n_nodes").as("h")))
     var auth: DataFrame = null
     // Scores stay SPARSE inside the loop (only nodes with a non-zero
@@ -182,26 +191,19 @@ object Graph {
       val aRaw = e.join(hub.select(col("id").as("src"), col("h")), Seq("src"))
         .groupBy(col("dst").as("id")).agg(sum(col("h")).as("ar"))
       val aTot = aRaw.agg(greatest(sum(col("ar")), lit(1L)).as("at"))
-      val nextAuth = LineageCut.cut(
-        aRaw.crossJoin(broadcast(aTot))
-          .select(col("id"), expr("ar * 1000000L div at").as("a")))
-      if (auth != null) LineageCut.release(auth)
-      auth = nextAuth
+      auth = auths.cut(aRaw.crossJoin(broadcast(aTot))
+        .select(col("id"), expr("ar * 1000000L div at").as("a")))
       val hRaw = e.join(auth.select(col("id").as("dst"), col("a")), Seq("dst"))
         .groupBy(col("src").as("id")).agg(sum(col("a")).as("hr"))
       val hTot = hRaw.agg(greatest(sum(col("hr")), lit(1L)).as("ht"))
-      val nextHub = LineageCut.cut(
-        hRaw.crossJoin(broadcast(hTot))
-          .select(col("id"), expr("hr * 1000000L div ht").as("h")))
-      LineageCut.release(hub)
-      hub = nextHub
+      hub = hubs.cut(hRaw.crossJoin(broadcast(hTot))
+        .select(col("id"), expr("hr * 1000000L div ht").as("h")))
     }
-    val out = nodes
+    nodes
       .join(hub, Seq("id"), "left")
       .join(auth, Seq("id"), "left")
       .select(col("id"), coalesce(col("h"), lit(0L)).as("hub_ppm"),
         coalesce(col("a"), lit(0L)).as("auth_ppm"))
-    out
   }
 
   /** Personalized PageRank (Jeh & Widom, WWW 2003): the teleport mass
@@ -209,7 +211,7 @@ object Graph {
     * scores measure proximity TO THE SEEDS — the graph-based curation
     * primitive ("rank everything by closeness to this trusted set").
     * Same scaled-integer BSP discipline as [[pageRankScaled]] (exact
-    * BIGINT arithmetic, per-iteration lineage cuts, opt-in reliable
+    * BIGINT arithmetic, periodic lineage cuts, opt-in reliable
     * checkpoints), same no-dangling-redistribution convention; the
     * only change is the seed-indicator teleport term. Seeds are a
     * DataFrame of node ids (column `id`) — its size bounds nothing
@@ -218,49 +220,23 @@ object Graph {
                                  dstCol: String, seeds: DataFrame,
                                  iters: Int,
                                  scale: Long = 1000000000000L): DataFrame = {
-    require(iters >= 1, s"iters must be positive, got $iters")
-    require(scale >= 1000000L, s"scale too small for ppm precision: $scale")
-    // out-degree attached ONCE via a src-keyed count window folded into
-    // the same cut as the distinct (the pageRankScaled discipline): one
-    // fewer shuffle + join per power step, same per-edge math
-    val eo = LineageCut.cut(edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .withColumn("od", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src")))))
-    val nodes = LineageCut.cut(eo.select(col("src").as("id"))
-      .unionByName(eo.select(col("dst").as("id"))).distinct())
+    requirePower(iters, scale)
     val seed = seeds.select(col("id").cast("long").as("id"))
       .distinct()
       .withColumn("__isSeed", lit(true))
     val nsDf = seed.agg(count(lit(1)).cast("long").as("n_seeds"))
-    val base = LineageCut.cut(nodes
-      .join(seed, Seq("id"), "left")
-      .crossJoin(broadcast(nsDf))
-      .select(col("id"), coalesce(col("__isSeed"), lit(false)).as("__isSeed"),
-        col("n_seeds")))
-    // already the single-reference chain shape (static cut `base`,
-    // (id, pr)-only iterated frame): rounds between PeriodicCut cuts
-    // stay lazy — K fewer barriers/materializations, same shuffles
-    val pc = new LineageCut.PeriodicCut(edges.sparkSession)
-    var rank = base.select(col("id"),
-      when(col("__isSeed"), expr(s"${scale}L div n_seeds"))
-        .otherwise(lit(0L)).as("pr"))
-    for (_ <- 1 to iters) {
-      val contribs = eo
-        .join(rank.select(col("id").as("src"), col("pr")), Seq("src"))
-        .select(col("dst").as("id"), expr("pr div od").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("m"))
-      rank = pc.step(base
-        .join(contribs, Seq("id"), "left")
+    powerIterate(outDegreeEdges(edges, srcCol, dstCol), expr("pr div od"),
+      nodes => nodes
+        .join(seed, Seq("id"), "left")
+        .crossJoin(broadcast(nsDf))
         .select(col("id"),
-          (when(col("__isSeed"),
-            expr(s"(15 * ${scale}L) div (100 * n_seeds)"))
-            .otherwise(lit(0L)) +
-            expr("(85 * coalesce(m, 0L)) div 100")).as("pr")))
-    }
-    rank.select(col("id"), col("pr").as("rank_scaled"))
+          coalesce(col("__isSeed"), lit(false)).as("__isSeed"),
+          col("n_seeds")),
+      when(col("__isSeed"), expr(s"${scale}L div n_seeds"))
+        .otherwise(lit(0L)),
+      when(col("__isSeed"), expr(s"(15 * ${scale}L) div (100 * n_seeds)"))
+        .otherwise(lit(0L)),
+      iters)
   }
 
   /** Exact triangle count over an undirected pair list — the graph
@@ -361,14 +337,15 @@ object Graph {
       edges.select(col("id_a").as("a"), col("id_b").as("b"))
         .unionByName(edges.select(col("id_b").as("a"), col("id_a").as("b")))
         .distinct())
-    var dist = LineageCut.cut(seeds.select(col("v"), lit(0L).as("d")))
+    // dist is read twice per round (the frontier join and the min-merge),
+    // so the chain cuts every round
+    val pc = new LineageCut.PeriodicCut()
+    var dist = pc.cut(seeds.select(col("v"), lit(0L).as("d")))
     for (_ <- 1 to maxIter) {
       val next = dist.join(ud, dist("v") === ud("a"))
         .select(ud("b").as("v"), (dist("d") + lit(1L)).as("d"))
-      val stepped = LineageCut.cut(dist.unionByName(next)
+      dist = pc.cut(dist.unionByName(next)
         .groupBy(col("v")).agg(min(col("d")).as("d")))
-      LineageCut.release(dist)
-      dist = stepped
     }
     val out = dist.select(col("v"), col("d").as("depth"))
     LineageCut.release(ud)
@@ -449,32 +426,39 @@ object Graph {
     * (pure connectivity) and [[kCore]] (density).
     *
     * Scale shape: per round, ONE edge⋈label shuffle + two map-side-
-    * combined aggregations keyed by vertex; per-iteration
-    * [[LineageCut]] with the BSP checkpoint discipline the PageRank
-    * family uses. Isolated vertices cannot occur (vertices come from
+    * combined aggregations keyed by vertex; lineage cut every K rounds
+    * ([[LineageCut.PeriodicCut]]), the discipline the PageRank family
+    * uses. Isolated vertices cannot occur (vertices come from
     * the edge list). */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds out of range: $rounds")
-    val ud = LineageCut.cut(edges
+    propagateLabels(LineageCut.cut(edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .unionByName(edges
         .select(col(dstCol).cast("long").as("a"), col(srcCol).cast("long").as("b")))
-      .distinct())
-    // single-reference chain (lab appears once per round): rounds
-    // between PeriodicCut cuts stay lazy — one barrier per K rounds
-    val pc = new LineageCut.PeriodicCut(edges.sparkSession)
+      .distinct()), count(lit(1)), rounds)
+  }
+
+  /** The vote loop both label propagations share: `ud` is the cut
+    * symmetric edge frame (a, b + whatever `vote` reads), `vote` the
+    * per-(vertex, label) aggregate. The label frame is referenced once
+    * per round — the [[LineageCut.PeriodicCut]] chain contract — so
+    * rounds between cuts stay lazy, one barrier per K rounds. */
+  private def propagateLabels(ud: DataFrame, vote: Column,
+                              rounds: Int): DataFrame = {
+    val pc = new LineageCut.PeriodicCut()
     var lab: DataFrame =
       ud.select(col("a").as("v")).distinct().withColumn("lbl", col("v"))
     for (_ <- 1 to rounds) {
       val nl = ud.join(lab.select(col("v").as("b"), col("lbl")), Seq("b"))
-        .groupBy(col("a").as("v"), col("lbl")).agg(count(lit(1)).as("__c"))
-      // argmax in ONE aggregation: min over struct(-count, label) is
-      // lexicographic, so it picks max count then min label among ties
+        .groupBy(col("a").as("v"), col("lbl")).agg(vote.as("__c"))
+      // argmax in ONE aggregation: min over struct(-votes, label) is
+      // lexicographic, so it picks max votes then min label among ties
       // — the same (votes desc, label asc) total order the old
       // max-then-join-then-filter shape implemented, minus one shuffle
-      // + one join per round (guide §2.4). Counts are >= 1, so the
-      // negation can never overflow.
+      // + one join per round (guide §2.4). Votes are >= 0 (counts, or
+      // sums of non-negative weights), so the negation never overflows.
       lab = pc.step(nl.groupBy(col("v"))
         .agg(min(struct((-col("__c")).as("nc"), col("lbl").as("l")))
           .as("__b"))
@@ -505,37 +489,18 @@ object Graph {
     *
     * Scale shape: identical to the unweighted sweep — per round ONE
     * edge⋈label shuffle + two map-side-combined aggregations keyed by
-    * vertex, per-iteration [[LineageCut]] under the BSP checkpoint
-    * discipline. */
+    * vertex, the same vote loop. */
   def labelPropagationWeighted(edges: DataFrame, srcCol: String,
       dstCol: String, wCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 16, s"rounds out of range: $rounds")
-    val ud = LineageCut.cut(edges
+    propagateLabels(LineageCut.cut(edges
       .select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"), col(wCol).cast("long").as("w"))
       .unionByName(edges
         .select(col(dstCol).cast("long").as("a"),
           col(srcCol).cast("long").as("b"), col(wCol).cast("long").as("w")))
-      .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w")))
-    // single-reference chain under PeriodicCut (see labelPropagation)
-    val pc = new LineageCut.PeriodicCut(edges.sparkSession)
-    var lab: DataFrame =
-      ud.select(col("a").as("v")).distinct().withColumn("lbl", col("v"))
-    for (_ <- 1 to rounds) {
-      val nl = ud.join(lab.select(col("v").as("b"), col("lbl")), Seq("b"))
-        .groupBy(col("a").as("v"), col("lbl")).agg(sum(col("w")).as("__c"))
-      // single-aggregation argmax (see [[labelPropagation]]): min over
-      // struct(-voteSum, label) = (votes desc, label asc). Vote sums
-      // are non-negative (weights are cast longs >= 0 per the
-      // contract), so the negation can never overflow.
-      lab = pc.step(nl.groupBy(col("v"))
-        .agg(min(struct((-col("__c")).as("nc"), col("lbl").as("l")))
-          .as("__b"))
-        .select(col("v"), col("__b.l").as("lbl")))
-    }
-    lab = pc.finish(lab)
-    LineageCut.release(ud)
-    lab.select(col("v").as("id"), col("lbl").as("community"))
+      .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w"))),
+      sum(col("w")), rounds)
   }
 
   /** ONE-LEVEL LOUVAIN local-move refinement (Blondel et al. 2008 §2,
@@ -599,7 +564,10 @@ object Graph {
     // k straight off lab instead of re-joining the deg table every
     // round — two fewer per-round joins (guide §2.4); the inner join
     // here keeps the old left-semi's "assigned ∩ has-edges" filter
-    var lab = LineageCut.cut(assignment
+    // lab is read three times per round (candidates, volumes, scoring),
+    // so the chain cuts every round
+    val pc = new LineageCut.PeriodicCut()
+    var lab = pc.cut(assignment
       .select(col("id").as("v"), col("community").cast("long").as("c"))
       .join(deg, Seq("v")))
     for (_ <- 1 to rounds) {
@@ -646,7 +614,7 @@ object Graph {
       // either (ties lose to stay in both shapes). Scores are bounded
       // by 2m·k_max (the documented envelope), so the negation can
       // never overflow.
-      val next = LineageCut.cut(scored.groupBy(col("v"))
+      lab = pc.cut(scored.groupBy(col("v"))
         .agg(min(when(col("c").isNotNull,
             struct((-col("__s")).as("ns"), col("c").as("cc")))).as("__b"),
           max(when(col("c") === col("__own"), col("__s"))).as("__osr"),
@@ -659,8 +627,6 @@ object Graph {
           when(-col("__b.ns") > coalesce(col("__osr"), col("__st0")),
             col("__b.cc")).otherwise(col("__oc")).as("c"),
           col("__k")))
-      LineageCut.release(lab)
-      lab = next
     }
     LineageCut.release(und)
     LineageCut.release(deg)
@@ -889,8 +855,11 @@ object Graph {
     // every round — the standard distributed truss-decomposition
     // posture (triangles ≤ Σ_e support(e), bounded by the wedge join
     // the old path already materialized transiently each round).
-    var tri = LineageCut.cut(orientedTriangles(und0))
-    var sup = LineageCut.cut(withSupport(und0.select(col("a"), col("b")), tri))
+    // both frames are read several times per round: cut every round
+    val tris = new LineageCut.PeriodicCut()
+    val sups = new LineageCut.PeriodicCut()
+    var tri = tris.cut(orientedTriangles(und0))
+    var sup = sups.cut(withSupport(und0.select(col("a"), col("b")), tri))
     LineageCut.release(und0)
     var r = 0
     var converged = false
@@ -901,41 +870,39 @@ object Graph {
       else {
         val dropped = sup.filter(col("support") < k - 2)
           .select(col("a"), col("b"))
-        val tri2 = LineageCut.cut(
+        tri = tris.cut(
           Seq(1, 2, 3).foldLeft(tri) { (t, i) =>
             t.join(dropped.select(col("a").as(s"a$i"), col("b").as(s"b$i")),
               Seq(s"a$i", s"b$i"), "left_anti")
           })
-        val sup2 = LineageCut.cut(withSupport(
+        sup = sups.cut(withSupport(
           sup.filter(col("support") >= k - 2).select(col("a"), col("b")),
-          tri2))
-        LineageCut.release(tri); tri = tri2
-        LineageCut.release(sup); sup = sup2
+          tri))
       }
       r += 1
     }
-    LineageCut.release(tri)
+    tris.close()
     sup.select(col("a"), col("b"), col("support"))
   }
 
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 64, s"rounds out of range: $rounds")
-    var ud = LineageCut.cut(
+    // ud is read three times per round (the degree count and both
+    // semi-joins), so the chain cuts every round
+    val pc = new LineageCut.PeriodicCut()
+    var ud = pc.cut(
       edges.select(col("id_a").as("a"), col("id_b").as("b"))
         .unionByName(edges.select(col("id_b").as("a"), col("id_a").as("b")))
         .distinct())
     for (_ <- 1 to rounds) {
       val keep = ud.groupBy(col("a")).agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k).select(col("a").as("__v"))
-      val next = LineageCut.cut(
+      ud = pc.cut(
         ud.join(keep, ud("a") === keep("__v"), "left_semi")
           .join(keep, ud("b") === keep("__v"), "left_semi"))
-      LineageCut.release(ud)
-      ud = next
     }
-    val out = ud.groupBy(col("a").as("v")).agg(count(lit(1)).as("degree"))
-    out
+    ud.groupBy(col("a").as("v")).agg(count(lit(1)).as("degree"))
   }
 
   /** Link prediction by neighbor-set Jaccard: node pairs sharing at

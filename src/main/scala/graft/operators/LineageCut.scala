@@ -5,7 +5,10 @@ import org.apache.spark.sql.DataFrame
 /** Per-iteration lineage cuts for the BSP loops (PageRank, BFS depth,
   * the min-label components fixpoint): without a cut, iteration i's
   * plan nests all i-1 predecessors, so analysis time and recomputation
-  * cost grow without bound.
+  * cost grow without bound. Every iterated frame goes through a
+  * [[PeriodicCut]] (which owns cut-then-release of the superseded
+  * round); [[cut]] and [[release]] are called directly only for
+  * loop-static frames (edge lists, node sets).
   *
   * Two modes, selected per session by `spark.graft.bsp.checkpoint`:
   *
@@ -28,18 +31,6 @@ import org.apache.spark.sql.DataFrame
 object LineageCut {
   /** Session conf key: "local" (default) | "reliable". */
   val ModeKey = "spark.graft.bsp.checkpoint"
-
-  /** Session conf key: cut every K-th BSP round (default 4). See
-    * [[PeriodicCut]]. "1" restores the cut-every-round behavior. */
-  val IntervalKey = "spark.graft.bsp.cutInterval"
-
-  private[graft] def interval(spark: org.apache.spark.sql.SparkSession): Int = {
-    val raw = spark.conf.get(IntervalKey, "4")
-    val k = scala.util.Try(raw.toInt).getOrElse(
-      throw new IllegalArgumentException(s"$IntervalKey must be an int: $raw"))
-    require(k >= 1 && k <= 16, s"$IntervalKey out of range [1,16]: $k")
-    k
-  }
 
   private def reliable(df: DataFrame): Boolean =
     df.sparkSession.conf.get(ModeKey, "local") == "reliable"
@@ -70,7 +61,10 @@ object LineageCut {
 
   /** Cut every K-th round of a single-reference BSP chain — the GraphX
     * PeriodicCheckpointer discipline (its default interval is 10),
-    * K = `spark.graft.bsp.cutInterval` (default 4).
+    * K = the constructor's `k` (default 4). Loops whose state is
+    * referenced more than once per round call [[cut]] every round
+    * instead of [[step]]: the same cut-then-release bookkeeping, no
+    * lazy rounds.
     *
     * Why: every eager cut is one driver barrier (a full job launch +
     * result wait) and one |state| materialization — and the r20 job
@@ -91,8 +85,8 @@ object LineageCut {
     * Releases stay safe because [[cut]] materializes the NEW frame
     * before releasing the superseded cut, and chain structure
     * guarantees nothing else references the old cut. */
-  final class PeriodicCut(spark: org.apache.spark.sql.SparkSession) {
-    private val k = interval(spark)
+  final class PeriodicCut(k: Int = 4) {
+    require(k >= 1 && k <= 16, s"PeriodicCut interval out of range [1,16]: $k")
     private var sinceCut = 0
     private var lastCut: DataFrame = null
     /** Per-round step: cuts on every K-th call, otherwise returns the
@@ -115,6 +109,10 @@ object LineageCut {
       * a still-lazy final frame would read freed blocks. */
     def finish(df: DataFrame): DataFrame =
       if (lastCut != null && (df eq lastCut)) df else cut(df)
+    /** Free the chain's last cut — for loops whose result does not
+      * read the final iterated frame. The chain is done afterwards. */
+    def close(): Unit =
+      if (lastCut != null) { LineageCut.release(lastCut); lastCut = null }
   }
 
   /** Free a superseded cut — block-manager blocks always, plus the

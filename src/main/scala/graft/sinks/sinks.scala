@@ -5,17 +5,12 @@ import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Output adapters (SURVEY.md §2.9). The engine core only ever sees the
-  * trait; the JDBC implementation is isolated here because the offline
-  * environment has no live database — it is exercised structurally (SQL
-  * generation) while the parquet sink is tested end-to-end.
+/** Output adapters (SURVEY.md §2.9). Each sink has a full-load write
+  * (`writeFull`, the reference's bulk insert of LOAD files) and an
+  * upsert by primary key (`upsert`, the reference's CDC-file upsert).
+  * The JDBC sink is exercised against an embedded database in the
+  * tests; the parquet sink end-to-end.
   */
-trait TableSink extends Serializable {
-  /** Full-load write (reference: bulk insert of LOAD files). */
-  def writeFull(df: DataFrame, table: String): Unit
-  /** Upsert by primary key (reference: CDC-file upsert). */
-  def upsert(df: DataFrame, table: String, pk: Seq[String]): Unit
-}
 
 /** Parquet directory sink — the anonymized-bucket analog.
   *
@@ -24,7 +19,7 @@ trait TableSink extends Serializable {
   * CdcMerge.latestPerKey) — without them a within-batch duplicate
   * picks a partition-order-dependent winner. */
 final class ParquetSink(outDir: String,
-                        tieBreakers: Seq[String] = Nil) extends TableSink {
+                        tieBreakers: Seq[String] = Nil) {
   def writeFull(df: DataFrame, table: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$table.parquet")
 
@@ -70,7 +65,7 @@ final class ParquetSink(outDir: String,
   * offline test env — kept deliberately thin.
   */
 final class JdbcSink(url: String, props: Properties,
-                     batchSize: Int = 1000) extends TableSink {
+                     batchSize: Int = 1000) {
   /** Target tables pre-exist (the reference imports schemas through the
     * control plane's pg_restore before any data write) — so this is a
     * plain parallel batched Append. */
@@ -160,30 +155,14 @@ object JdbcSink {
 }
 
 /** Source-catalog access (SURVEY.md §2.1 catalog scans): table list,
-  * columns, primary key. JDBC impl reads information_schema through
-  * spark.read.jdbc; the static impl backs offline tests and file-only
-  * runs. */
-trait SourceCatalog {
-  def tables(schema: String): Seq[String]
-  def columns(schema: String, table: String): Seq[(String, String)]
-  def primaryKey(schema: String, table: String): Seq[String]
-}
-
-final class StaticCatalog(meta: Map[String, (Seq[(String, String)], Seq[String])])
-    extends SourceCatalog {
-  def tables(schema: String): Seq[String] = meta.keys.toSeq.sorted
-  def columns(schema: String, table: String): Seq[(String, String)] = meta(table)._1
-  def primaryKey(schema: String, table: String): Seq[String] = meta(table)._2
-}
-
-/** information_schema is portable; the primary-key lookup is not — the
+  * columns, primary key, read through spark.read.jdbc.
+  * information_schema is portable; the primary-key lookup is not — the
   * default is the reference's Postgres pg_index query, and `pkQuery`
   * swaps in another dialect's (the DuckDB integration test injects a
   * duckdb_constraints() variant). */
 final class JdbcCatalog(spark: SparkSession, url: String, props: Properties,
                         pkQuery: (String, String) => String =
-                          JdbcCatalog.postgresPkQuery)
-    extends SourceCatalog {
+                          JdbcCatalog.postgresPkQuery) {
   private def q(sql: String): DataFrame = {
     val p = new Properties(); p.putAll(props)
     spark.read.jdbc(url, s"($sql) AS sub", p)

@@ -50,6 +50,28 @@ class GraphSpec extends SparkTestBase {
     assert(got.values.toSet == Set(333333333333L))
   }
 
+  test("PageRank variants return materialized rows, not a lazy last round (iters = 5, cut interval 4)") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val e = Seq((1L, 2L, 1L), (1L, 3L, 2L), (2L, 3L, 1L), (3L, 1L, 3L))
+      .toDF("src", "dst", "w")
+    val variants = Seq(
+      "pageRankScaled" -> Graph.pageRankScaled(e, "src", "dst", iters = 5),
+      "pageRankWeightedScaled" ->
+        Graph.pageRankWeightedScaled(e, "src", "dst", "w", iters = 5),
+      "personalizedPageRankScaled" -> Graph.personalizedPageRankScaled(
+        e, "src", "dst", Seq(1L).toDF("id"), iters = 5))
+    // a lazy fifth round would still carry its eo ⋈ rank join and its
+    // sum, re-running them every time the result is used
+    val lazyRounds = variants.collect {
+      case (name, df) if df.queryExecution.analyzed.exists {
+          case _: Join | _: Aggregate => true
+          case _ => false
+        } => name
+    }
+    assert(lazyRounds.isEmpty, s"lazy last round returned by: $lazyRounds")
+    variants.foreach { case (name, df) => assert(df.count() == 3L, name) }
+  }
+
   test("triangleCount: K4 has 4, C4 has 0, duplicates and loops ignored") {
     val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (2L, 1L), (3L, 3L)) // reversed duplicate + self-loop are noise

@@ -82,8 +82,7 @@ class LineageCutSpec extends SparkTestBase {
     * aggregation over the previous frame), ending with finish() and a
     * release of the loop-static input — the exact lifecycle the BSP
     * loops run. Returns (rows, jobsLaunched). */
-  private def runChain(interval: String): (Map[Long, Long], Int) = {
-    spark.conf.set(LineageCut.IntervalKey, interval)
+  private def runChain(interval: Int): (Map[Long, Long], Int) = {
     var jobs = 0
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -94,7 +93,7 @@ class LineageCutSpec extends SparkTestBase {
     try {
       val base = LineageCut.cut(spark.range(0, 1000)
         .select((col("id") % 13).as("k"), col("id").as("v")))
-      val pc = new LineageCut.PeriodicCut(spark)
+      val pc = new LineageCut.PeriodicCut(interval)
       var st: org.apache.spark.sql.DataFrame = base
       for (_ <- 1 to 5) {
         // one aggregation per round, previous frame referenced ONCE —
@@ -111,15 +110,12 @@ class LineageCutSpec extends SparkTestBase {
       org.apache.spark.sql.graftbridge.Bridge
         .flushListenerBus(spark.sparkContext)
       (rows, jobs)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.unset(LineageCut.IntervalKey)
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("PeriodicCut: interval 4 = identical rows to interval 1 with fewer driver jobs; finish survives input release") {
-    val (rows1, jobs1) = runChain("1")
-    val (rows4, jobs4) = runChain("4")
+    val (rows1, jobs1) = runChain(1)
+    val (rows4, jobs4) = runChain(4)
     assert(rows4 === rows1, "lazy rounds must not change the chain's result")
     // interval 1 cuts 5 times (+1 base); interval 4 cuts at round 4 and
     // at finish (round 5) — at least two barriers saved
@@ -128,16 +124,13 @@ class LineageCutSpec extends SparkTestBase {
   }
 
   test("PeriodicCut: finish is a no-op when the last round already cut") {
-    spark.conf.set(LineageCut.IntervalKey, "2")
-    try {
-      val pc = new LineageCut.PeriodicCut(spark)
-      val a = pc.step(spark.range(3).toDF("v")) // round 1: lazy
-      assert(a.queryExecution.analyzed.collectLeaves().forall(
-        !_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
-        "round below the interval must stay lazy")
-      val b = pc.step(a.select((col("v") + 1).as("v"))) // round 2: cut
-      assert(pc.finish(b) eq b, "finish on an already-cut frame is identity")
-      LineageCut.release(b)
-    } finally spark.conf.unset(LineageCut.IntervalKey)
+    val pc = new LineageCut.PeriodicCut(2)
+    val a = pc.step(spark.range(3).toDF("v")) // round 1: lazy
+    assert(a.queryExecution.analyzed.collectLeaves().forall(
+      !_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
+      "round below the interval must stay lazy")
+    val b = pc.step(a.select((col("v") + 1).as("v"))) // round 2: cut
+    assert(pc.finish(b) eq b, "finish on an already-cut frame is identity")
+    LineageCut.release(b)
   }
 }
